@@ -14,7 +14,11 @@ Here the same contracts run the Spark-first jobs:
 Argument mapping onto Spark's runtime:
   num_threads -> local[num_threads] master (the reference's pthread pool)
   task_size   -> spark.sql.files.maxPartitionBytes (the reference's mmap
-                 chunk size handed to each worker, mapreduce.c:167-222)
+                 chunk size handed to each worker, mapreduce.c:167-222);
+                 it sets the split size of both jobs, string_match's line
+                 numbering included
+  input_folder -> a file or a folder; a folder's lines are numbered
+                  over its files sorted by path, then by byte offset
   output_file -> ONE formatted text file, byte-identical to the
                  reference's printf writer ("%s\t%d" / "%d:%s"). Single-file
                  output is the reference's contract; at scale drop

@@ -7,15 +7,18 @@ line, with an optional line_no — the reference keys string_match output by
 line number); the others are the formats any real pipeline needs.
 
 Scale notes: all readers return lazy DataFrames; file listing/splitting is
-Spark's (maxPartitionBytes governs split size). line numbers via
-zipWithIndex are a narrow transformation (no shuffle) but pin the plan to
-an RDD scan; only request them when the query needs reference-style keys.
+Spark's (maxPartitionBytes governs split size). Line numbers are computed
+in the JVM from the text scan itself: a per-split row count, a running sum
+over the splits, and a broadcast join back. That costs a second scan of
+the input and one small shuffle, but no Python worker and no eager job;
+only request them when the query needs reference-style keys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def read_text(
@@ -26,14 +29,44 @@ def read_text(
 
     with_line_numbers=True adds a global 0-based line_no column (true line
     numbers — the reference's per-character counter bug, SURVEY App. A.3,
-    is deliberately not reproduced)."""
+    is deliberately not reproduced). Lines are numbered in the order of
+    the files sorted by path, then by byte offset within each file, so a
+    folder numbers the same on every machine whatever its listing order.
+
+    The numbering runs in the JVM and stays lazy. A split's lines are
+    contiguous and in file order inside one scan partition, so
+    monotonically_increasing_id() minus the split's smallest id is a
+    line's index within its split; a running sum of the split line counts,
+    ordered by (path, split start), gives the lines before each split.
+    A filter on the result stays above the id projection, because Catalyst
+    does not push a filter through a nondeterministic projection, so the
+    ids count every line of a split, kept or not."""
+    lines = spark.read.text(path)
     if not with_line_numbers:
-        return spark.read.text(path)
-    rdd = spark.sparkContext.textFile(path).zipWithIndex()
-    schema = StructType(
-        [StructField("value", StringType()), StructField("line_no", LongType())]
+        return lines
+    split = ["_file", "_start"]
+    rows = lines.select(
+        "value",
+        F.col("_metadata.file_path").alias("_file"),
+        F.col("_metadata.file_block_start").alias("_start"),
+        F.monotonically_increasing_id().alias("_id"),
     )
-    return spark.createDataFrame(rdd.map(lambda t: (t[0], t[1])), schema)
+    before = Window.orderBy(*split).rowsBetween(Window.unboundedPreceding, -1)
+    offsets = (
+        rows.groupBy(*split)
+        .agg(F.min("_id").alias("_min_id"), F.count("*").alias("_n"))
+        # one row per split: one task finishes the aggregate and feeds the
+        # window directly, instead of a second exchange into one partition
+        .coalesce(1)
+        .select(
+            *split,
+            (F.coalesce(F.sum("_n").over(before), F.lit(0)) - F.col("_min_id"))
+            .alias("_shift"),
+        )
+    )
+    return rows.join(F.broadcast(offsets), split).select(
+        "value", (F.col("_id") + F.col("_shift")).alias("line_no")
+    )
 
 
 def read_csv(

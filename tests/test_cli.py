@@ -97,3 +97,24 @@ def test_run_unknown_query_fails_cleanly():
     res = _run_cli(["run", "no_such_query", "/root/testdata/sf0.001"])
     assert res.returncode == 1
     assert "unknown query" in res.stderr
+
+
+def test_string_match_in_process_on_folder(spark, tmp_path):
+    """string_match over an input folder: lines are numbered across the
+    files in path order (the reference's argv takes an input_folder)."""
+    from mapreduce_sm_spark.__main__ import run_string_match
+
+    folder = tmp_path / "in"
+    folder.mkdir()
+    (folder / "b.txt").write_text("DATA in b\nnothing\n")
+    (folder / "a.txt").write_text(_INPUT)
+    out = tmp_path / "out.txt"
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        run_string_match(2, 65536, "data", str(folder), str(out))
+    finally:
+        spark.conf.set(key, old)  # _session sets it on the shared session
+    assert out.read_bytes() == (
+        b"2:the DATA fox counts data rows\n4:Data at line three\n5:DATA in b\n"
+    )

@@ -3,6 +3,9 @@ reference's single local text file)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -219,3 +222,131 @@ def test_bucketed_writer_never_touches_other_pids_dir(spark, tmp_path):
         import shutil
 
         shutil.rmtree(foreign, ignore_errors=True)
+
+
+def _file_lines(data: bytes) -> list[str]:
+    """Lines as Spark's and Hadoop's text readers cut them: split on \\n,
+    drop one trailing \\r, no phantom line after a final newline."""
+    lines = data.split(b"\n")
+    if lines[-1] == b"":
+        lines.pop()
+    return [ln.removesuffix(b"\r").decode() for ln in lines]
+
+
+def _numbered(spark, path):
+    from mapreduce_sm_spark.sources import read_text
+
+    df = read_text(spark, path, with_line_numbers=True)
+    return [(r.line_no, r.value) for r in df.orderBy("line_no").collect()]
+
+
+def _folder_want(folder) -> list[tuple[int, str]]:
+    lines = []
+    for f in sorted(folder.iterdir()):
+        lines += _file_lines(f.read_bytes())
+    return list(enumerate(lines))
+
+
+@contextmanager
+def _confs(spark, **confs):
+    """Sets session confs for one block, then restores (or unsets) them."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_read_text_folder_numbers_in_path_order(spark, tmp_path):
+    """A folder numbers its lines over the files sorted by path, not in
+    the filesystem's listing order."""
+    folder = tmp_path / "folder"
+    folder.mkdir()
+    for name in ["c", "a", "b10", "b2"]:
+        (folder / name).write_text(
+            "".join(f"{name} line {i}\n" for i in range(3))
+        )
+    assert _numbered(spark, str(folder)) == _folder_want(folder)
+
+
+def _edge_case_folder(folder):
+    """Files that each span many 1 KB splits, with CRLF endings, empty
+    lines, a missing trailing newline, and one empty file."""
+    import random
+
+    folder.mkdir()
+    rnd = random.Random(7)
+
+    def body(n):
+        lines = [
+            "".join(rnd.choice("ab cd") for _ in range(rnd.randint(0, 70)))
+            for _ in range(n)
+        ]
+        lines[3] = ""
+        return lines
+
+    (folder / "lf.txt").write_bytes(("\n".join(body(300)) + "\n").encode())
+    (folder / "crlf.txt").write_bytes(("\r\n".join(body(300)) + "\r\n").encode())
+    (folder / "no_eol.txt").write_bytes("\n".join(body(300)).encode())
+    (folder / "empty.txt").write_bytes(b"")
+    for i in range(4):
+        (folder / f"small{i}.txt").write_bytes(("\n".join(body(10)) + "\n").encode())
+
+
+@pytest.mark.parametrize(
+    "confs,splits_files",
+    [
+        ({"spark.sql.files.maxPartitionBytes": "1024"}, True),
+        (
+            {
+                "spark.sql.files.maxPartitionBytes": str(64 << 20),
+                "spark.sql.files.openCostInBytes": "1",
+                "spark.sql.files.minPartitionNum": "1",
+            },
+            False,
+        ),
+    ],
+    ids=["split_1k", "packed_64m"],
+)
+def test_read_text_line_numbers_across_splits(spark, tmp_path, confs, splits_files):
+    folder = tmp_path / "edge"
+    _edge_case_folder(folder)
+    want = _folder_want(folder)
+    n_files = sum(1 for f in folder.iterdir() if f.stat().st_size)
+    with _confs(spark, **confs):
+        n_parts = spark.read.text(str(folder)).rdd.getNumPartitions()
+        got = _numbered(spark, str(folder))
+    if splits_files:
+        assert n_parts > n_files  # files span several scan partitions
+    else:
+        assert n_parts < n_files  # several files share one scan partition
+    assert got == want  # line_no is exactly 0..n-1, each with its line
+
+
+def test_read_text_line_numbers_plan_is_jvm_only_and_lazy(spark, tmp_path):
+    """The numbered frame scans text in the JVM (no RDD, no Python eval)
+    and building it starts no Spark job."""
+    from mapreduce_sm_spark.sources import read_text
+
+    path = tmp_path / "in.txt"
+    path.write_text("x\ny\nz\n")
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(), default=-1)
+
+    before = last_job()
+    df = read_text(spark, str(path), with_line_numbers=True)
+    assert last_job() == before
+    assert df.count() == 3
+    assert last_job() > before  # the probe does see the jobs an action starts
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan text" in plan
+    for node in ("ExistingRDD", "PythonRDD", "EvalPython"):
+        assert node not in plan, plan
