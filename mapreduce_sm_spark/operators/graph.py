@@ -16,8 +16,10 @@ PageRank (importance weighting for corpus sampling).
     is bounded by O(sqrt(m)), so the wedge join's fan-out is
     O(m · sqrt(m)) worst case instead of O(m · d_max) — the standard
     scalable formulation (every triangle is counted exactly once, from
-    its (deg,id)-minimal vertex). Both joins are plain equi-joins Spark
-    executes as shuffle/sort-merge joins; no cartesian anywhere;
+    its (deg,id)-minimal vertex). Every join is a plain equi-join Spark
+    executes as a shuffle/sort-merge join; no cartesian anywhere. The
+    count is one lazy plan with no cache and no eager job, so AQE sees
+    (and reuses) the whole edge lineage in a single action;
   - PageRank is the edge-only formulation: per-iteration state is one
     (node, rank) frame, contributions flow through an edges join +
     groupBy(dst) (map-side partial sums), the dangling mass is a 1-row
@@ -69,18 +71,11 @@ def cooccurrence_edges(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def triangle_stats(edges: DataFrame) -> DataFrame:
-    """1-row frame (n_nodes, n_edges, n_wedges, n_triangles), all int64.
-
-    Degree orientation: direct each edge from the (deg, id)-smaller
-    endpoint; triangles = oriented paths u->v->w closed by u->w.
-    """
-    # edges is referenced by the degree union (twice) and the orientation
-    # join — but deliberately NOT cached: the upstream build is one
-    # co-partitioned self-join whose recompute costs less than
-    # materializing ~m rows through the block store, and leaving it
-    # lazy lets AQE plan each consumer independently (measured at sf0.1:
-    # caching edges+deg was ~1.5x slower than recompute).
+def _oriented_nodes(edges: DataFrame) -> DataFrame:
+    """Per-node frame (node, deg, nbrs): undirected degree and the
+    out-neighbour list under degree orientation — each edge directed from
+    its (deg, id)-smaller endpoint, so every size(nbrs) is O(sqrt(m)).
+    Sinks carry an empty list."""
     deg = (
         edges.select(F.col("p1").alias("node"))
         .unionAll(edges.select(F.col("p2").alias("node")))
@@ -92,74 +87,53 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     first_is_src = (F.col("deg1") < F.col("deg2")) | (
         (F.col("deg1") == F.col("deg2")) & (F.col("p1") < F.col("p2"))
     )
-    oriented = (
+    out = (
         edges.join(d1, "p1")
         .join(d2, "p2")
         .select(
-            F.when(first_is_src, F.col("p1")).otherwise(F.col("p2")).alias("src"),
+            F.when(first_is_src, F.col("p1")).otherwise(F.col("p2")).alias("node"),
             F.when(first_is_src, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
         )
-    )
-    # Two references below (edge stream + adjacency build) — materialize
-    # once so the edge build + orientation joins run a single time
-    # (PLANS.md r05: lazy caches + AQE's concurrent broadcast builds
-    # recompute in-flight partitions; the count() barrier prevents it).
-    release_caches("graph.triangles")  # one-generation discipline
-    oriented = oriented.cache()
-    oriented.count()
-    track_caches("graph.triangles", oriented)
-
-    # Compact-forward counting: a triangle with orientation-ordered
-    # vertices u -> v -> w is found exactly once at edge (u, v) as
-    # w in N+(u) intersect N+(v). The per-node out-adjacency array is
-    # bounded at O(sqrt(m)) by the orientation, so the whole adjacency
-    # side is ~m int64s — it broadcasts at test scale and SMJs on the
-    # node key at corpus scale. Crucially the wedge set (sum of
-    # out-deg^2, 83M rows at sf0.1) is never materialized or shuffled:
-    # each edge row does one JVM-side array_intersect instead.
-    adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    nu = adj.select(F.col("src").alias("au"), F.col("nbrs").alias("nu"))
-    nv = adj.select(F.col("src").alias("av"), F.col("nbrs").alias("nv"))
-    empty = F.array().cast("array<bigint>")
-    tri = (
-        oriented.join(nu, F.col("src") == F.col("au"))
-        .join(nv, F.col("dst") == F.col("av"), "left")
-        .select(
-            F.size(
-                F.array_intersect(F.col("nu"), F.coalesce(F.col("nv"), empty))
-            ).alias("t")
-        )
-        .agg(
-            # coalesce: an empty edge set must emit 0 like the oracle's
-            # count(*), not a NULL sum
-            F.coalesce(F.sum("t"), F.lit(0)).cast("long").alias("n_triangles")
-        )
-    )
-    # summary degrees re-derived from the CACHED oriented frame, not the
-    # pre-orientation deg: orientation maps each undirected edge to
-    # exactly one directed row, so undirected deg(v) = in(v) + out(v)
-    # over oriented — same multiset, but this branch reads cache blocks
-    # instead of replaying the edge self-join + distinct a second time
-    # (r16 opt round: full query 6.8-7.1 s -> 5.0-5.6 s at sf0.1)
-    deg_o = (
-        oriented.select(F.col("src").alias("node"))
-        .unionAll(oriented.select(F.col("dst").alias("node")))
         .groupBy("node")
-        .agg(F.count("*").alias("deg"))
+        .agg(F.collect_list("dst").alias("nbrs"))
     )
+    return deg.join(out, "node", "left").select(
+        "node", "deg", F.coalesce(F.col("nbrs"), F.array()).alias("nbrs")
+    )
+
+
+def triangle_stats(edges: DataFrame) -> DataFrame:
+    """1-row frame (n_nodes, n_edges, n_wedges, n_triangles), all int64.
+
+    One lazy plan over the per-node frame of `_oriented_nodes`: building
+    it starts no Spark job and persists nothing, and AQE reuses the
+    repeated edge subtree's exchanges within the single action.
+    """
+    nodes = _oriented_nodes(edges)
     # exact int64 arithmetic throughout (module contract): deg*(deg-1) is
     # even, so `div 2` is exact; a double `/ 2` sum would lose low bits
-    # past 2^53 while the oracle sums exactly
-    summary = deg_o.agg(
+    # past 2^53 while the oracle sums exactly. coalesce: an empty edge set
+    # must emit 0 like the oracle's count(*), not a NULL sum
+    summary = nodes.agg(
         F.count("*").alias("n_nodes"),
         F.coalesce(F.expr("sum(deg) div 2"), F.lit(0))
         .cast("long")
         .alias("n_edges"),
-        F.coalesce(
-            F.expr("sum(deg * (deg - 1) div 2)"), F.lit(0)
-        )
+        F.coalesce(F.expr("sum(deg * (deg - 1) div 2)"), F.lit(0))
         .cast("long")
         .alias("n_wedges"),
+    )
+    # Compact-forward counting: a triangle with orientation-ordered
+    # vertices u -> v -> w is found exactly once at edge (u, v) as
+    # w in N+(u) intersect N+(v). The wedge set (sum of out-deg^2, 83M
+    # pairs at sf0.1) never becomes rows: each oriented edge row carries
+    # N+(u) and does one JVM-side array_intersect instead.
+    nu = nodes.select(F.explode("nbrs").alias("v"), F.col("nbrs").alias("nu"))
+    nv = nodes.select(F.col("node").alias("v"), F.col("nbrs").alias("nv"))
+    tri = nu.join(nv, "v").agg(
+        F.coalesce(F.sum(F.size(F.array_intersect("nu", "nv"))), F.lit(0))
+        .cast("long")
+        .alias("n_triangles")
     )
     return summary.crossJoin(tri).select(
         "n_nodes", "n_edges", "n_wedges", "n_triangles"

@@ -5,7 +5,15 @@ below are computed by hand in the comments)."""
 
 from __future__ import annotations
 
-from mapreduce_sm_spark.operators.graph import pagerank_int, triangle_stats
+from itertools import combinations
+
+import pytest
+
+from mapreduce_sm_spark.operators.graph import (
+    _oriented_nodes,
+    pagerank_int,
+    triangle_stats,
+)
 
 
 def _edges(spark, pairs):
@@ -33,6 +41,67 @@ def test_triangle_star_plus_closing_edge(spark):
     g = _edges(spark, [(0, 1), (0, 2), (0, 3), (1, 2)])
     row = triangle_stats(g).collect()[0]
     assert tuple(row) == (4, 4, 5, 1)
+
+
+@pytest.mark.parametrize(
+    "pairs, want, out",
+    [
+        # K5: every degree is 4. C(5,2)=10 edges, 5 * C(4,2)=30 wedges,
+        # C(5,3)=10 triangles
+        (
+            list(combinations(range(1, 6), 2)),
+            (5, 10, 30, 10),
+            {i: list(range(i + 1, 6)) for i in range(1, 6)},
+        ),
+        # C5: every degree is 2; 5 wedges, no triangle
+        (
+            [(1, 2), (2, 3), (3, 4), (4, 5), (1, 5)],
+            (5, 5, 5, 0),
+            {1: [2, 5], 2: [3], 3: [4], 4: [5], 5: []},
+        ),
+    ],
+    ids=["K5", "C5"],
+)
+def test_triangle_all_degrees_tied(spark, pairs, want, out):
+    # equal degrees everywhere: orientation is the id tie-break alone
+    g = _edges(spark, pairs)
+    assert tuple(triangle_stats(g).collect()[0]) == want
+    got = {r["node"]: sorted(r["nbrs"]) for r in _oriented_nodes(g).collect()}
+    assert got == out
+
+
+def test_orientation_points_edges_away_from_the_hub(spark):
+    """Degree orientation, not id order: on a star K1,40 (hub id 0) plus
+    one edge closing leaves 1 and 2, every star edge points at the hub, so
+    the hub has no out-neighbours and every out-list is within sqrt(2m) --
+    the bound the O(m * sqrt(m)) intersect cost rests on. Plain id order
+    would give the hub all 40 leaves."""
+    pairs = [(0, leaf) for leaf in range(1, 41)] + [(1, 2)]
+    g = _edges(spark, pairs)
+    nbrs = {r["node"]: r["nbrs"] for r in _oriented_nodes(g).collect()}
+    assert nbrs[0] == []
+    assert max(len(n) for n in nbrs.values()) <= (2 * len(pairs)) ** 0.5
+    # degrees 40, 2, 2 and 38 ones: C(40,2) + 1 + 1 = 782 wedges
+    assert tuple(triangle_stats(g).collect()[0]) == (41, 41, 782, 1)
+
+
+def test_triangle_stats_is_one_lazy_plan(spark):
+    """Building the count starts no Spark job, and its executed plan
+    reads no cached relation: the whole count is one action."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(), default=-1)
+
+    g = _edges(spark, [(0, 1), (0, 2), (0, 3), (1, 2)])
+    before = last_job()
+    df = triangle_stats(g)
+    assert last_job() == before
+    assert tuple(df.collect()[0]) == (4, 4, 5, 1)
+    assert last_job() > before  # the probe does see the jobs an action starts
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("InMemoryRelation", "InMemoryTableScan"):
+        assert node not in plan, plan
 
 
 def _str_edges(spark, pairs):
